@@ -201,7 +201,7 @@ def _kg_turn_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kg_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG growth curve (round 5): newly-minted canonical triples per
-    epoch-week of first assertion + running total — the extraction
+    hourly bucket of first assertion + running total — the extraction
     monitoring product of a continuously-built KG."""
     from rdfcmap_spark.plans.pipeline import triple_growth, triple_timeline
 
@@ -4058,8 +4058,8 @@ SELECT prev_tool, tool, count(*) AS n_transitions FROM seq GROUP BY 1, 2
         "WITH " + _TR_CTE + """
 SELECT conv_id, turn_idx, role, text, n_tokens, cum_tokens FROM (
   SELECT conv_id, turn_idx, role, text, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
+         CAST(sum(n_tokens) OVER (PARTITION BY conv_id ORDER BY turn_idx DESC
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
   FROM (SELECT *,
           CAST(len(regexp_extract_all(coalesce(text, ''), '\\S+')) + 1 AS BIGINT)
             AS n_tokens

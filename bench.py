@@ -4,7 +4,7 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
 line::
 
-    {"metric": "kg_triples_per_sec", "value": N, "unit": "sec",
+    {"metric": "kg_triples_per_sec", "value": N, "unit": "1/s",
      "queries": {...per-query seconds...}, "sf": 0.1, ...}
 
 The headline metric is KG-construction throughput (triples/sec) of the
@@ -231,7 +231,7 @@ def main() -> None:
     spark = build_session(cpus=cpus, app_name="rdfcmap_spark_bench")
 
     queries = entrymod.queries()
-    # two probe samples before the pipeline + one after guarantee >=3
+    # one probe sample before the pipeline + two after guarantee >=3
     # samples on every code path (the PIPELINE_ONLY path previously had 2,
     # whose "median" was the max — r4 ADVICE)
     drift_samples = [drift_probe(spark, sf_dir, queries)]
@@ -273,7 +273,7 @@ def main() -> None:
                 {
                     "metric": "kg_triples_per_sec",
                     "value": pipe["triples_per_sec"],
-                    "unit": "sec",
+                    "unit": "1/s",
                     "queries": {"kg_pipeline_full": pipe["seconds"]},
                     "sf": sf,
                     "cpus": cpus,
@@ -298,7 +298,7 @@ def main() -> None:
             {
                 "metric": "kg_triples_per_sec",
                 "value": pipe["triples_per_sec"],
-                "unit": "sec",
+                "unit": "1/s",
                 "queries": per_query,
                 "sf": sf,
                 "cpus": cpus,

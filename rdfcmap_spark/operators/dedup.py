@@ -611,7 +611,8 @@ def incremental_dup_groups_indexed(
        index is a cache of ``lsh_band_keys(old representatives)``, which
        depends only on text);
     4. append the batch's fresh-representative band keys as the next
-       snapshot, so the NEXT batch finds the union index. The append is
+       snapshot, so the NEXT batch finds the union index (an all-duplicate
+       batch has none and commits no snapshot). The append is
        content-fingerprint idempotent (a restarted job re-appending the
        same batch is absorbed) and optimistically concurrent (O_EXCL).
 
@@ -636,12 +637,14 @@ def incremental_dup_groups_indexed(
         min_jaccard=min_jaccard,
         old_band_index=old_bk.select("doc_id", "band", "band_key"),
     )
-    table_log.commit(
-        lsh_band_keys(_fresh_banding_reps(old_docs, new_docs)),
-        index_table,
-        mode="append",
-        partition_by=["band"],
-    )
+    # batch-sized; checkpointed so the emptiness check does not scan the
+    # old corpus a second time. An all-duplicate batch has nothing to
+    # index, and an empty append would write no file to read back.
+    fresh = _fresh_banding_reps(old_docs, new_docs).localCheckpoint()
+    if not fresh.isEmpty():
+        table_log.commit(
+            lsh_band_keys(fresh), index_table, mode="append", partition_by=["band"]
+        )
     return out
 
 

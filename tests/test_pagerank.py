@@ -84,3 +84,45 @@ def test_ppr_matches_python_mirror_and_localizes(spark):
     # mass localizes: the seed's component holds all rank, the other none
     assert got["a"] > 0 and got["b"] > 0 and got["c"] > 0
     assert got["x"] == 0 and got["y"] == 0
+
+
+def test_empty_edges_give_empty_frame(spark):
+    from rdfcmap_spark.operators.graph import personalized_pagerank
+
+    df = spark.createDataFrame([], "src string, dst string")
+    seeds = spark.createDataFrame([("a",)], "node string")
+    for out in (pagerank(df), personalized_pagerank(df, seeds)):
+        assert out.schema.simpleString() == "struct<node:string,r_nano:bigint,pr:double>"
+        assert out.collect() == []
+
+
+def test_ppr_without_seed_in_graph_is_all_zero(spark):
+    from rdfcmap_spark.operators.graph import personalized_pagerank
+
+    edges = [("a", "b"), ("b", "c"), ("c", "a")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    for rows in ([("zzz",)], []):
+        seeds = spark.createDataFrame(rows, "node string")
+        got = {r["node"]: r["r_nano"] for r in personalized_pagerank(df, seeds).collect()}
+        assert got == {"a": 0, "b": 0, "c": 0}
+
+
+def test_pagerank_is_ppr_seeded_with_every_node(spark):
+    from rdfcmap_spark.operators.graph import personalized_pagerank
+
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"), ("c", "e")]
+    df = spark.createDataFrame(edges, "src string, dst string").repartition(3)
+    seeds = spark.createDataFrame([(x,) for x in "abcde"], "node string")
+    got = sorted(pagerank(df, iters=7).collect())
+    assert got == sorted(personalized_pagerank(df, seeds, iters=7).collect())
+    assert {r["node"]: r["r_nano"] for r in got} == _ref_pagerank(edges, iters=7)
+
+
+def test_source_only_node_gets_exactly_the_teleport_term(spark):
+    """d has out-edges but no in-edges: after any round its rank is the
+    bare teleport term floor((1-d)*1e9/N)."""
+    edges = [("a", "b"), ("b", "a"), ("d", "a"), ("d", "b")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {r["node"]: r["r_nano"] for r in pagerank(df, iters=3).collect()}
+    assert got == _ref_pagerank(edges, iters=3)
+    assert got["d"] == math.floor((1.0 - 0.85) * PR_SCALE / 3)

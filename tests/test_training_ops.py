@@ -770,6 +770,38 @@ def test_indexed_incremental_matches_stateless_and_full(spark, tmp_path, monkeyp
     assert got2[8] == got2[3] == got2[5] and got2[9] == 9
 
 
+
+def test_indexed_incremental_all_duplicate_batch_commits_nothing(spark, tmp_path):
+    """A batch whose every text is already in the corpus (a replay) has no
+    fresh representative: it still gets its groups, and the band index
+    keeps its version instead of committing an empty snapshot."""
+    from rdfcmap_spark.operators import dedup
+    from rdfcmap_spark.sources import table_log
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    other = "one two three four five six seven eight nine ten"
+    docs = spark.createDataFrame(
+        [(0, base), (1, other), (2, base + " extra tail words"),   # corpus
+         (5, base), (6, other)],                                   # replay
+        "doc_id long, text string",
+    )
+    thresh = 0.3
+    old = docs.filter("doc_id <= 2")
+    batch = docs.filter("doc_id >= 5")
+    t = str(tmp_path / "band_index")
+    old_map = dedup.dup_groups(old, min_jaccard=thresh)
+
+    got = dedup.incremental_dup_groups_indexed(old, old_map, batch, t, min_jaccard=thresh)
+    got = {r["doc_id"]: r["canonical_id"] for r in got.collect()}
+    full = {
+        r["doc_id"]: r["canonical_id"]
+        for r in dedup.dup_groups(docs, min_jaccard=thresh).collect()
+    }
+    assert got == full
+    assert got[5] == got[0] and got[6] == got[1]
+    # the bootstrap snapshot only: the replay appended nothing
+    assert table_log.current_version(t) == 1
+
 def test_quality_filter_rules(spark):
     from rdfcmap_spark.operators.textstats import quality_filter
 
